@@ -23,9 +23,12 @@ re-implemented: on a real deployment the underlying store (HDFS/S3)
 owns replica placement and failure recovery, which is the idiomatic
 Spark mapping of the membership+ring layers (SURVEY.md §1).
 
-Reads are lazy DataFrames: base ∪ appends with a stable
-``_append_seq`` so downstream plans can reproduce byte-order
-semantics when they need them (e.g. exporting a line file).
+Reads are lazy DataFrames over ONE multi-path parquet scan of the
+base plus the pending append dirs (``TableStore._scan``), so a read
+costs one listing and one Spark schema probe however many appends are
+pending. Every row carries a stable ``_append_seq`` so downstream
+plans can reproduce byte-order semantics when they need them (e.g.
+exporting a line file).
 """
 
 from __future__ import annotations
@@ -220,6 +223,17 @@ class TableStore:
         stamp+rename, not on the parquet write."""
         if not self.exists(name):
             raise TableStoreError(f"table doesn't exist ({name})")
+        # the read is one scan under the base's schema, which would
+        # silently drop an extra column or null-fill a missing one:
+        # reject drift here, at the bad writer
+        from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+            _check_write_schema,
+        )
+
+        try:
+            _check_write_schema(self._table_dir(name), df.schema)
+        except ValueError as e:
+            raise TableStoreError(f"{e} ({name})") from e
         ad = self._appends_dir(name)
         if self.serialize_appends:
             from distributed_file_system_with_stream_processing_spark.locks import (
@@ -247,8 +261,6 @@ class TableStore:
         sees and no fold reclaims). Age-gated like the DataSource
         writers' staging GC: a CONCURRENT append's live _pending dir is
         younger than the window and survives."""
-        import shutil
-
         ad = self._appends_dir(name)
         if not os.path.isdir(ad):
             return
@@ -289,9 +301,42 @@ class TableStore:
         with concurrent.futures.ThreadPoolExecutor(max_workers=len(dfs) or 1) as ex:
             return list(ex.map(lambda df: self.append(name, df), dfs))
 
+    # an append file is <table>/appends/<seq>/<file>: anchored at the
+    # end, so an ``appends/`` component in the store root never
+    # matches, and base files (<table>/base/<file>) never do either —
+    # even in a table named ``appends``. Spark URL-encodes the path;
+    # batch names are URL-safe stamps, so they read back as-is.
+    _SEQ_FROM_PATH = r"/appends/(?!base/)([^/]+)/[^/]+$"
+
+    def _scan(self, name: str, batches: list[str], base: bool = True) -> DataFrame:
+        """ONE parquet scan over the base (unless ``base=False``) and
+        the given append batch dirs, read with the base's schema plus a
+        nullable ``_append_seq`` string: a compact_appends() batch
+        keeps its stored per-row stamps, a plain batch gets its dir
+        name (parsed from ``_metadata.file_path``), base rows get ''.
+        One schema reads every batch because every writer rejects a
+        batch whose schema differs from the base's
+        (sources/pyds.py ``_check_write_schema``)."""
+        bdir = self._base_dir(name)
+        schema = self.spark.read.parquet(bdir).schema.add("_append_seq", "string")
+        paths = ([bdir] if base else []) + [
+            os.path.join(self._appends_dir(name), b) for b in batches
+        ]
+        df = self.spark.read.schema(schema).parquet(*(paths or [bdir]))
+        df = df.withColumn(
+            "_append_seq",
+            F.coalesce(
+                "_append_seq",
+                F.regexp_extract("_metadata.file_path", self._SEQ_FROM_PATH, 1),
+            ),
+        )
+        return df if paths else df.limit(0)
+
     def get(self, name: str, with_seq: bool = False, cache: bool = False) -> DataFrame:
         """Reference `get`: merged view (base + appends in timestamp
-        order). Lazy — Catalyst prunes/pushes into every batch scan.
+        order) as one parquet scan over the base and every pending
+        batch dir (see ``_scan`` for how ``_append_seq`` is derived).
+        Lazy — Catalyst prunes/pushes into that scan.
 
         ``cache=True`` maps the reference client's read cache
         (cache/cache.go: LRU of merged reads, invalidated by writes) to
@@ -304,20 +349,7 @@ class TableStore:
         key = f"{name}|seq={with_seq}"
         if cache and key in self._cached:
             return self._cached[key]
-        df = self.spark.read.parquet(self._base_dir(name)).withColumn(
-            "_append_seq", F.lit("")
-        )
-        for seq in self._append_batches(name):
-            part = self.spark.read.parquet(
-                os.path.join(self._appends_dir(name), seq)
-            )
-            # a compact_appends() batch carries per-row _append_seq
-            # (the original append stamps) — keep it, so ordering
-            # semantics survive compaction; plain batches stamp the
-            # batch name
-            if "_append_seq" not in part.columns:
-                part = part.withColumn("_append_seq", F.lit(seq))
-            df = df.unionByName(part)
+        df = self._scan(name, self._append_batches(name))
         df = df if with_seq else df.drop("_append_seq")
         if cache:
             df = df.persist()
@@ -332,12 +364,13 @@ class TableStore:
         """Newest original append stamp inside a batch dir — the dir
         name for plain batches; compact_appends() batches keep their
         true maximum in a permanent marker (their dir is named by the
-        EARLIEST folded stamp)."""
-        m = os.path.join(self._appends_dir(name), batch, self._MAX_SEQ_MARKER)
-        if os.path.isfile(m):
-            with open(m) as fh:
-                return fh.read().strip()
-        return batch
+        EARLIEST folded stamp). One implementation, shared with the
+        DataSource readers (sources/pyds.py)."""
+        from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+            _batch_max_seq,
+        )
+
+        return _batch_max_seq(self._appends_dir(name), batch)
 
     def compact_appends(self, name: str) -> int:
         """Fold every pending append batch into ONE batch without
@@ -372,12 +405,7 @@ class TableStore:
         self._repair_stream_ledger(name, batches)
         ad = self._appends_dir(name)
         max_seq = max(self._batch_max_seq(name, b) for b in batches)
-        combined = None
-        for b in batches:
-            part = self.spark.read.parquet(os.path.join(ad, b))
-            if "_append_seq" not in part.columns:
-                part = part.withColumn("_append_seq", F.lit(b))
-            combined = part if combined is None else combined.unionByName(part)
+        combined = self._scan(name, batches, base=False)
         target = batches[0]
         tmp = os.path.join(ad, self._COMPACTING_PREFIX + target)
         if os.path.isdir(tmp):
@@ -430,22 +458,12 @@ class TableStore:
                 f"snapshot {seq!r} predates last merge point {floor!r} "
                 f"({name}); pre-merge history is folded into the base"
             )
-        df = self.spark.read.parquet(self._base_dir(name))
-        cols = df.columns
-        for batch in self._append_batches(name):
-            if batch <= seq:
-                part = self.spark.read.parquet(
-                    os.path.join(self._appends_dir(name), batch)
-                )
-                # a compact_appends() batch is named by its EARLIEST
-                # folded stamp and carries per-row _append_seq — the
-                # row-level filter keeps snapshot precision exact
-                if "_append_seq" in part.columns:
-                    part = part.filter(F.col("_append_seq") <= seq).drop(
-                        "_append_seq"
-                    )
-                df = df.unionByName(part.select(cols))
-        return df
+        # a compact_appends() batch is named by its EARLIEST folded
+        # stamp and carries per-row _append_seq — the row-level filter
+        # keeps snapshot precision exact
+        batches = [b for b in self._append_batches(name) if b <= seq]
+        df = self._scan(name, batches)
+        return df.filter(F.col("_append_seq") <= seq).drop("_append_seq")
 
     def diff(self, name: str, seq_from: str, seq_to: str) -> DataFrame:
         """Change-data capture between two snapshot points: exactly the
@@ -475,42 +493,18 @@ class TableStore:
                 f"diff since base unavailable: appends up to {floor!r} are "
                 f"folded into the base ({name})"
             )
-        cols = None
-        out = None
-        for batch in self._append_batches(name):
-            part = None
-            if seq_from < batch <= seq_to:
-                part = self.spark.read.parquet(
-                    os.path.join(self._appends_dir(name), batch)
-                )
-            elif batch <= seq_from:
-                # a compacted batch is named by its EARLIEST folded
-                # stamp; rows later than seq_from may live inside it —
-                # but only if its max-stamp marker says so: the marker
-                # check is one local file read and skips opening the
-                # parquet footer of every fully-old batch
-                if self._batch_max_seq(name, batch) <= seq_from:
-                    continue
-                maybe = self.spark.read.parquet(
-                    os.path.join(self._appends_dir(name), batch)
-                )
-                if "_append_seq" in maybe.columns:
-                    part = maybe
-            if part is None:
-                continue
-            if "_append_seq" in part.columns:
-                part = part.filter(
-                    (F.col("_append_seq") > seq_from)
-                    & (F.col("_append_seq") <= seq_to)
-                ).drop("_append_seq")
-            if cols is None:
-                cols = part.columns
-            part = part.select(cols)
-            out = part if out is None else out.unionByName(part)
-        if out is None:
-            base = self.spark.read.parquet(self._base_dir(name))
-            return base.limit(0)
-        return out
+        # a compacted batch is named by its EARLIEST folded stamp, so
+        # rows later than seq_from may live in a batch named <=
+        # seq_from — but only if its max-stamp marker says so (one
+        # local file read per batch, no parquet footer)
+        batches = [
+            b
+            for b in self._append_batches(name)
+            if b <= seq_to and self._batch_max_seq(name, b) > seq_from
+        ]
+        seq = F.col("_append_seq")
+        df = self._scan(name, batches, base=False)
+        return df.filter((seq > seq_from) & (seq <= seq_to)).drop("_append_seq")
 
     def _invalidate(self, name: str) -> None:
         """Drop cached reads of ``name`` (write-invalidate, as the

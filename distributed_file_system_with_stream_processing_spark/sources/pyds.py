@@ -3,8 +3,8 @@
 ``spark.read.format("tablestore").option("root", ...).option("table",
 ...)`` reads a TableStore table (reference HyDFS file: base + deferred
 append batches, dfs.py) through the PLUGGABLE source API
-(pyspark.sql.datasource) instead of the hand-rolled union in
-``TableStore.get``:
+(pyspark.sql.datasource) instead of the native multi-path parquet
+scan in ``TableStore.get``:
 
 - one ``InputPartition`` per data FILE (base and append batches alike),
   so a 100 TB log fans out across executors exactly like the native
@@ -16,7 +16,7 @@ append batches, dfs.py) through the PLUGGABLE source API
 
 Role: API surface + a second, independently-implemented reader for the
 same on-disk format (the tests cross-check it row-for-row against
-``TableStore.get``). The native DataFrame union path remains the
+``TableStore.get``). The native parquet scan remains the
 performance path at scale — it gets JVM parquet vectorization and
 filter pushdown, which Python DataSources do not (Spark evaluates
 filters above the source); docstring-level honesty about that division
@@ -160,8 +160,9 @@ class _StreamSplit(InputPartition):
 
 def _batch_max_seq(appends_dir: str, seq: str) -> str:
     """Newest original stamp in a batch dir — the dir name for plain
-    batches; compact_appends() batches carry it in a marker file
-    (mirrors dfs.TableStore._batch_max_seq)."""
+    batches; compact_appends() batches carry it in a marker file.
+    The one implementation: dfs.TableStore._batch_max_seq delegates
+    here."""
     m = os.path.join(appends_dir, seq, "_max_seq.txt")
     if os.path.isfile(m):
         with open(m) as fh:
@@ -299,6 +300,12 @@ def _canon_arrow_type(t) -> str:
         return _canon_arrow_type(t.value_type)
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         return f"list<{_canon_arrow_type(t.value_type)}>"
+    # nested nullability and map entry names are not types: a struct or
+    # map built by expressions (non-null children) reads back the same
+    if pa.types.is_struct(t):
+        return "struct<" + ",".join(f"{f.name}:{_canon_arrow_type(f.type)}" for f in t) + ">"
+    if pa.types.is_map(t):
+        return f"map<{_canon_arrow_type(t.key_type)},{_canon_arrow_type(t.item_type)}>"
     return str(t)
 
 

@@ -1214,3 +1214,120 @@ def test_multiappend_serializes_under_lock(spark, tmp_path):
     assert len(set(stamps)) == 8
     got = {(r["k"], r["v"]) for r in store.get("t").collect()}
     assert got == {(0, 0)} | {(i, i * 10) for i in range(1, 9)}
+
+
+@pytest.mark.parametrize(
+    "schema, rows",
+    [
+        ("id long, val string, extra int", [(2, "x", 7)]),  # extra column
+        ("id long", [(2,)]),  # missing column
+        ("id string, val string", [("2", "x")]),  # different type
+    ],
+    ids=["extra", "missing", "retyped"],
+)
+def test_append_rejects_schema_drift(store, spark, schema, rows):
+    """get() reads every batch in one scan under the base's schema,
+    which would silently drop an extra column or null-fill a missing
+    one — so a drifted batch is rejected at append() and never
+    published."""
+    store.create("t", _df(spark, [(1, "base")]))
+    with pytest.raises(TableStoreError, match="schema mismatch"):
+        store.append("t", spark.createDataFrame(rows, schema))
+    assert not os.path.exists(store._appends_dir("t"))  # nothing written
+    assert [tuple(r) for r in store.get("t").collect()] == [(1, "base")]
+
+
+def test_append_schema_check_ignores_nested_nullability(store, spark):
+    """Struct children and map entries built by expressions are
+    non-nullable / differently named in Arrow but read back the same —
+    not drift."""
+    from pyspark.sql import functions as F
+
+    schema = "id long, s struct<a:int,b:string>, m map<string,int>"
+    store.create("t", spark.createDataFrame([(1, (1, "x"), {"k": 1})], schema))
+    store.append(
+        "t",
+        spark.range(2, 3).select(
+            "id",
+            F.struct(F.lit(2).alias("a"), F.lit("y").alias("b")).alias("s"),
+            F.create_map(F.lit("k"), F.lit(2)).alias("m"),
+        ),
+    )
+    got = sorted((r["id"], r["s"]["b"], r["m"]["k"]) for r in store.get("t").collect())
+    assert got == [(1, "x", 1), (2, "y", 2)]
+
+
+def _file_scans(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FileScan parquet")
+
+
+def test_get_is_one_parquet_scan_with_exact_seqs(spark, tmp_path):
+    """get() is ONE parquet FileScan over the base and every pending
+    batch dir — a compacted batch, a stream-sink ``-sb`` batch and 40
+    plain batches (past Spark's 32-path parallel-listing threshold) —
+    and every row's _append_seq is exactly what the old per-batch
+    union produced: '' for base rows, the dir name for plain and
+    stream batches, the stored original stamp for compacted rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+        _AppendCommit,
+        _TableStoreStreamWriter,
+    )
+
+    root = str(tmp_path / "store")
+    store = TableStore(spark, root)
+    store.create("t", _df(spark, [(0, "base"), (1, "base")]))
+    want = {0: "", 1: ""}
+    for i in (10, 11, 12):
+        want[i] = store.append("t", _df(spark, [(i, "c")]))
+    assert store.compact_appends("t") == 3
+
+    staging = os.path.join(root, "t", "appends", "_staging")
+    os.makedirs(staging)
+    part = os.path.join(staging, "part-0.parquet")
+    pq.write_table(pa.table({"id": [20], "val": ["s"]}), part)
+    _TableStoreStreamWriter(os.path.join(root, "t")).commit(
+        [_AppendCommit((part,))], batchId=0
+    )
+    (sb,) = [b for b in store._append_batches("t") if b.endswith("-sb00000000")]
+    want[20] = sb
+
+    for i in range(100, 140):
+        want[i] = store.append("t", _df(spark, [(i, "p")]))
+    assert len(store._append_batches("t")) == 42
+
+    df = store.get("t", with_seq=True)
+    got = {r["id"]: r["_append_seq"] for r in df.collect()}
+    assert got == want
+    assert _file_scans(df) == 1
+    assert _file_scans(store.get("t")) == 1
+
+
+def test_seq_parsing_ignores_appends_in_store_root(spark, tmp_path):
+    """The batch stamp is parsed from each file's path, anchored to the
+    table's own ``appends/<seq>/<file>``: a store root that itself has
+    an ``appends/`` component and a space changes nothing, and neither
+    does a table named ``appends``."""
+    store = TableStore(spark, str(tmp_path / "appends" / "my store"))
+    for name in ("t", "appends"):
+        store.create(name, _df(spark, [(1, "base")]))
+        s1 = store.append(name, _df(spark, [(2, "a")]))
+        s2 = store.append(name, _df(spark, [(3, "b")]))
+        s3 = store.append(name, _df(spark, [(4, "c")]))
+        seqs = lambda: {
+            r["id"]: r["_append_seq"] for r in store.get(name, with_seq=True).collect()
+        }
+        ids = lambda df: sorted(r["id"] for r in df.collect())
+        want = {1: "", 2: s1, 3: s2, 4: s3}
+        assert seqs() == want
+        assert ids(store.get_as_of(name, "")) == [1]
+        assert ids(store.get_as_of(name, s2)) == [1, 2, 3]
+        assert ids(store.diff(name, "", s1)) == [2]
+        assert ids(store.diff(name, s1, s3)) == [3, 4]
+        assert store.compact_appends(name) == 3
+        assert seqs() == want
+        assert ids(store.get_as_of(name, s2)) == [1, 2, 3]
+        assert ids(store.diff(name, s1, s2)) == [3]
